@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark contract (driver-run): one JSON line
   * `{"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}`.
@@ -29,22 +28,14 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // the one remaining WARN in the round-14 bench tail: plan strings
-      // wider than the 25-field default log a truncation warning per
-      // occurrence. Rendering the full string costs nothing measurable
-      // (plan strings are driver-side debug output) and keeps the
-      // driver's bench tail literally warning-free (round-14 verdict
-      // What's-wrong #2).
-      .config("spark.sql.debug.maxToStringFields", "10000")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    graft.model.Tables.bootstrap(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    // the one remaining WARN in the round-14 bench tail: plan strings
+    // wider than the 25-field default log a truncation warning per
+    // occurrence. Rendering the full string costs nothing measurable
+    // (plan strings are driver-side debug output) and keeps the
+    // driver's bench tail literally warning-free (round-14 verdict
+    // What's-wrong #2).
+    val spark = Harness.session("WARN",
+      "spark.sql.debug.maxToStringFields" -> "10000")
     // The ≤64-row offset windows (percent-rank range-bucketing, replay
     // offsets) intentionally run partition-less ABOVE an aggregate —
     // PlanQualitySpec proves no unaggregated global window exists — so
@@ -88,15 +79,9 @@ object Bench {
       "d_simhash_pairs", "o27_fused_concat", "t_boilerplate").foreach { q =>
       warm(q)(SparkEntry.queries(q)(spark, warmSf).count())
     }
-    warm("shared_dedup_pairs")(graft.operators.Dedup.ngramJaccard(spark, warmSf).count())
-    warm("shared_minhash_mins")(graft.operators.Dedup.materializeMinhash(spark, warmSf))
-    warm("shared_simhash_sig")(graft.operators.Dedup.materializeSimhash(spark, warmSf))
-    warm("shared_embed_pairs")(graft.operators.Similarity.materializeEmbedPairs(spark, warmSf))
-    warm("shared_kmeans_model")(graft.operators.Similarity.materializeKmeans(spark, warmSf))
-    warm("shared_pq_model")(graft.operators.Similarity.materializePq(spark, warmSf))
-    warm("shared_ivfpq_model")(graft.operators.Similarity.materializeIvfPq(spark, warmSf))
-    warm("shared_bpe_model")(graft.operators.TextAnalysis.materializeBpe(spark, warmSf))
-    warm("shared_source_grams")(graft.operators.Dedup.materializeSourceGrams(spark, warmSf))
+    SharedArtifacts.builds.foreach { case (name, build) =>
+      warm(name)(build(spark, warmSf))
+    }
 
     // Per-query failures are COLLECTED, not swallowed: round 7's silent
     // `catch { _ => () }` let ten analysis-dead queries post 0.05 s "times"
@@ -109,9 +94,8 @@ object Bench {
     // min-of-two must only consider successful passes: a fast crash in
     // pass 1 followed by a real pass 2 would otherwise report the crash
     // time as the query's "best" (the run still exits nonzero either way)
-    def timed(name: String, f: () => Unit): (Double, Boolean) = {
-      val t0 = System.nanoTime()
-      val ok =
+    def timed(name: String, f: () => Unit): (Double, Boolean) =
+      Harness.timed {
         try { f(); true } catch {
           case e: Throwable =>
             val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
@@ -119,8 +103,7 @@ object Bench {
             System.err.println(s"[bench] $name FAILED: ${msg.take(500)}")
             false
         }
-      ((System.nanoTime() - t0) / 1e9, ok)
-    }
+      }
     // best of two (time, ok) passes: min over successful ones; if both
     // failed, the failure time still fills the entry (flagged via errors)
     def bestOf(a: (Double, Boolean), b: (Double, Boolean)): Double =
@@ -136,50 +119,18 @@ object Bench {
     // cold, and BENCH_NOTES documents 7-27× cold-pass swings on this box
     // (46-94 s for a 3.5 s-warm kmeans build), which made the round-6
     // headline a measurement artifact. Discipline is ScaleCheck's: build
-    // all six (pass 1), clear EVERY model cache, rebuild all six (pass 2),
-    // report per-entry min. Clearing between rounds — not between the two
-    // passes of one entry — matters because the clears are coarse
-    // (clearPairCache drops pairs+minhash+grams together); per-entry
-    // clearing would silently evict a sibling's just-timed build and make
-    // its consumers re-pay it inside their timed pass. After pass 2 all
-    // caches are populated, so consumer queries time steady-state plans.
-    val sharedBuilds = Seq[(String, () => Unit)](
-      "shared_dedup_pairs" ->
-        (() => { graft.operators.Dedup.ngramJaccard(spark, sfDir).count(); () }),
-      "shared_minhash_mins" ->
-        (() => graft.operators.Dedup.materializeMinhash(spark, sfDir)),
-      // round-15: the SimHash signature table joins the shared-build set
-      // (it was rebuilt once per consumer — d_simhash_pairs AND
-      // d_detector_votes — every pass; same economics as minhash_mins)
-      "shared_simhash_sig" ->
-        (() => graft.operators.Dedup.materializeSimhash(spark, sfDir)),
-      // round-15: the LSH-blocked embedding near-dup pair list joins the
-      // shared-build set (it was rebuilt once per consumer — five
-      // declared queries — every pass; same economics as dedup_pairs)
-      "shared_embed_pairs" ->
-        (() => graft.operators.Similarity.materializeEmbedPairs(spark, sfDir)),
-      "shared_kmeans_model" ->
-        (() => graft.operators.Similarity.materializeKmeans(spark, sfDir)),
-      "shared_pq_model" ->
-        (() => graft.operators.Similarity.materializePq(spark, sfDir)),
-      "shared_ivfpq_model" ->
-        (() => graft.operators.Similarity.materializeIvfPq(spark, sfDir)),
-      "shared_bpe_model" ->
-        (() => graft.operators.TextAnalysis.materializeBpe(spark, sfDir)),
-      "shared_source_grams" ->
-        (() => graft.operators.Dedup.materializeSourceGrams(spark, sfDir)))
-    val sharedPass1 = sharedBuilds.map { case (name, f) => name -> timed(name, f) }
-    warm("cache-clear") {
-      graft.operators.Dedup.clearPairCache()
-      graft.operators.Similarity.clearEmbedPairCache()
-      graft.operators.Similarity.clearKmeansCache()
-      graft.operators.Similarity.clearPqCache()
-      graft.operators.TextAnalysis.clearBpeCache()
+    // all (pass 1), clear EVERY model cache, rebuild all (pass 2), report
+    // per-entry min (SharedArtifacts.clearAll says why the clear sits
+    // between the rounds). After pass 2 all caches are populated, so
+    // consumer queries time steady-state plans.
+    def sharedPass() = SharedArtifacts.builds.map { case (name, build) =>
+      name -> timed(name, () => build(spark, sfDir))
     }
-    val sharedPass2 = sharedBuilds.map { case (name, f) => name -> timed(name, f) }
-    val shared = sharedBuilds.map { case (name, _) =>
-      name -> bestOf(sharedPass1.toMap.apply(name),
-        sharedPass2.toMap.apply(name))
+    val sharedPass1 = sharedPass()
+    warm("cache-clear")(SharedArtifacts.clearAll())
+    val sharedPass2 = sharedPass()
+    val shared = sharedPass1.zip(sharedPass2).map { case ((name, a), (_, b)) =>
+      name -> bestOf(a, b)
     }
 
     // fixed (sorted) query order, two passes, min-time per query

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -38,28 +37,13 @@ object CommitBench {
     java.nio.file.Files.createTempDirectory(s"graft-commitbench-$prefix")
       .toString
 
-  private def minOf2(f: () => Unit): Double = {
-    def pass(): Double = {
-      val t0 = System.nanoTime(); f(); (System.nanoTime() - t0) / 1e9
-    }
-    math.min(pass(), pass())
-  }
-
   def main(args: Array[String]): Unit = {
     val commits = args.headOption.map(_.toInt).getOrElse(60)
     val perCommit = args.lift(1).map(_.toInt).getOrElse(5000)
     require(commits > CommitLogIngest.CheckpointEvery + ProbeAt,
       "too few commits to exercise a checkpoint")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    graft.model.Tables.bootstrap(spark)
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session("ERROR",
+      "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false")
     implicit val sc = spark.sqlContext
     import spark.implicits._
 
@@ -82,9 +66,8 @@ object CommitBench {
           q.processAllAvailable()
           if (w + 1 == ProbeAt) {
             val tp = System.nanoTime() // probe excluded from the timed wall
-            early = minOf2(() => {
-              CommitLogIngest.snapshot(spark, table).count(); ()
-            })
+            early = Harness.minOf2(
+              CommitLogIngest.snapshot(spark, table).count())._1
             probeNs = System.nanoTime() - tp
           }
         }
@@ -99,22 +82,18 @@ object CommitBench {
     val table = tmp("timed") + "/table"
     val (wallS, earlyS) = run(table, tmp("timedck"), commits, perCommit)
 
-    val lateS = minOf2(() => {
-      CommitLogIngest.snapshot(spark, table).count(); ()
-    })
+    val lateS = Harness.minOf2(
+      CommitLogIngest.snapshot(spark, table).count())._1
     val latest = commits.toLong - 1
     // the claim under test: LOG RESOLUTION is O(checkpoint + tail), so it
     // stays flat as commits accumulate — vs the full-replay contrast that
     // scans every version dir (what every read would cost without the
     // checkpoint). End-to-end reads also carry the data scan, which
     // legitimately grows with ingested files until compaction.
-    val resolveS = minOf2(() => {
-      CommitLogIngest.liveFiles(spark, table, latest); ()
-    })
-    val resolveFullS = minOf2(() => {
-      graft.sources.TimeTravel.snapshotFiles(spark, s"$table/log", latest)
-      ()
-    })
+    val resolveS = Harness.minOf2(
+      CommitLogIngest.liveFiles(spark, table, latest))._1
+    val resolveFullS = Harness.minOf2(
+      graft.sources.TimeTravel.snapshotFiles(spark, s"$table/log", latest))._1
 
     // WRITE-PATH contrast: the DSv2 writer (per-row parquet-mr Group
     // materialization in the executors) vs commitAppend (Spark's native
@@ -126,7 +105,7 @@ object CommitBench {
     def df(w: Int) = wave(w, perCommit).toDF("id", "payload")
     def timeAppends(commit: (Int) => Unit): Double = {
       commit(100) // warm (JIT + writer init) on the same table
-      minOf2(() => (0 until wBatches).foreach(commit))
+      Harness.minOf2((0 until wBatches).foreach(commit))._1
     }
     val dsvTable = tmp("dsv") + "/table"
     val dsv2S = timeAppends(w =>

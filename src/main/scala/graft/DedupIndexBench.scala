@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.sources.DedupIndex
@@ -27,10 +26,6 @@ import graft.streaming.CommitLogIngest
   * Usage: `SPARK_GRAFT_SF_DIR=... sbt "runMain graft.DedupIndexBench"`
   * — one JSON line on stdout (recorded in BENCH_NOTES.md). */
 object DedupIndexBench {
-
-  private def timed(f: () => Unit): Double = {
-    val t0 = System.nanoTime(); f(); (System.nanoTime() - t0) / 1e9
-  }
 
   /** Bytes READ by every task between reset() and sum — the O(delta)
     * evidence: wall time at small SF is fixed-cost noise (a dozen tiny
@@ -61,15 +56,7 @@ object DedupIndexBench {
   def main(args: Array[String]): Unit = {
     val sfDir =
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    graft.model.Tables.bootstrap(spark)
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session("ERROR")
     val root = Files.createTempDirectory("graft-didx-bench").toString
     val base = root + "/base"
     val index = root + "/index"
@@ -83,8 +70,8 @@ object DedupIndexBench {
     val meter = new ReadMeter
     spark.sparkContext.addSparkListener(meter)
     append(col("doc_id") % 32 =!= 0) // history: 31/32 of the corpus
-    val initS = timed(() =>
-      DedupIndex.init(spark, base, index, baseVersion = 0L))
+    val initS = Harness.timed(
+      DedupIndex.init(spark, base, index, baseVersion = 0L))._1
     val corpusDocs = CommitLogIngest.snapshot(spark, base).count()
     append(col("doc_id") % 32 === 0) // the delta batch
     val deltaDocs = CommitLogIngest.snapshot(spark, base).count() -
@@ -92,22 +79,17 @@ object DedupIndexBench {
     meter.reset()
     if (sys.env.contains("GRAFT_ADVANCE_TRACE"))
       spark.sparkContext.setLogLevel("INFO")
-    val advanceS = timed(() => { DedupIndex.advance(spark, base, index); () })
+    val advanceS = Harness.timed(DedupIndex.advance(spark, base, index))._1
     spark.sparkContext.setLogLevel("ERROR")
-    var newPairs = 0L
-    val newPairsS = timed(() => {
-      newPairs = DedupIndex.newPairsAt(spark, base, index, version = 1L)
-        .count()
-    })
+    val (newPairsS, newPairs) = Harness.timed(
+      DedupIndex.newPairsAt(spark, base, index, version = 1L).count())
     val incrBytes = meter.sum()
     // the recompute-the-world comparators over the SAME final corpus
     val snap = CommitLogIngest.snapshot(spark, base).select("doc_id", "text")
     meter.reset()
-    val fullSigS = timed(() => { DedupIndex.sigRows(snap).count(); () })
-    var fullPairs = 0L
-    val fullPairsS = timed(() => {
-      fullPairs = DedupIndex.pairsOf(DedupIndex.sigRows(snap)).count()
-    })
+    val fullSigS = Harness.timed(DedupIndex.sigRows(snap).count())._1
+    val (fullPairsS, fullPairs) = Harness.timed(
+      DedupIndex.pairsOf(DedupIndex.sigRows(snap)).count())
     val fullBytes = meter.sum()
     // sanity: the index answers the same world the recompute sees
     val idxPairs = DedupIndex.pairsFromIndex(spark, index).count()

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Shuffle-volume probe for the shared dedup pair build (round-15
   * optimization evidence, VERDICT r14 Next #1): times
@@ -18,13 +17,7 @@ object DedupShuffleProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions).getOrCreate()
-    graft.model.Tables.bootstrap(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("WARN")
     val sw = new java.util.concurrent.atomic.AtomicLong
     val sr = new java.util.concurrent.atomic.AtomicLong
     spark.sparkContext.addSparkListener(new SparkListener {
@@ -36,9 +29,8 @@ object DedupShuffleProbe {
         }
       }
     })
-    val t0 = System.nanoTime()
-    val pairs = graft.operators.Dedup.ngramJaccard(spark, sfDir).count()
-    val secs = (System.nanoTime() - t0) / 1e9
+    val (secs, pairs) =
+      Harness.timed(graft.operators.Dedup.ngramJaccard(spark, sfDir).count())
     val fmt = String.format(java.util.Locale.ROOT, "%.2f", Double.box(secs))
     println(s"""{"probe":"dedup_pairs","sf":"$sfDir","pairs":$pairs,""" +
       s""""build_s":$fmt,"shuffle_write_b":${sw.get},""" +

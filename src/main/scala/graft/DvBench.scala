@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.streaming.CommitLogIngest
@@ -29,13 +28,6 @@ object DvBench {
   private def tmp(): String =
     Files.createTempDirectory("graft-dvbench").toString
 
-  private def minOf2(f: () => Unit): Double = {
-    def pass(): Double = {
-      val t0 = System.nanoTime(); f(); (System.nanoTime() - t0) / 1e9
-    }
-    math.min(pass(), pass())
-  }
-
   private def dirBytes(dir: String): Long =
     if (!Files.exists(Paths.get(dir))) 0L
     else {
@@ -50,15 +42,7 @@ object DvBench {
   def main(args: Array[String]): Unit = {
     val sfDir =
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    graft.model.Tables.bootstrap(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("WARN")
 
     val docs = graft.model.Tables.documents(spark, sfDir)
       .select("doc_id", "source", "n_chars")
@@ -80,12 +64,10 @@ object DvBench {
       .agg(count(lit(1)), sum(col("n_chars").cast("long")))
       .collect()(0)
 
-    val readClean = minOf2(() => { census(cow); () })
+    val readClean = Harness.minOf2(census(cow))._1
 
-    val t0 = System.nanoTime()
-    val (_, cowFiles) = CommitLogIngest.deleteWhere(spark, cow, pred,
-      statsCol = Some("doc_id"))
-    val cowDeleteS = (System.nanoTime() - t0) / 1e9
+    val (cowDeleteS, (_, cowFiles)) = Harness.timed(
+      CommitLogIngest.deleteWhere(spark, cow, pred, statsCol = Some("doc_id")))
     // bytes the CoW delete wrote = the rewrite's add files
     val cowV = CommitLogIngest.latestVersion(cow)
     val cowAdds = spark.read.parquet(s"$cow/log/version=$cowV")
@@ -93,22 +75,19 @@ object DvBench {
       .map(_.getString(0))
     val cowBytes = cowAdds.map(p => Files.size(Paths.get(p))).sum
 
-    val t1 = System.nanoTime()
-    val (dvV, dvFiles) = CommitLogIngest.deleteWhere(spark, dv, pred,
-      statsCol = Some("doc_id"))
-    val dvDeleteS = (System.nanoTime() - t1) / 1e9
+    val (dvDeleteS, (dvV, dvFiles)) = Harness.timed(
+      CommitLogIngest.deleteWhere(spark, dv, pred, statsCol = Some("doc_id")))
     val dvBytes = dirBytes(CommitLogIngest.dvDir(dv, dvV))
 
     // parity before reporting anything
     val a = census(cow); val b = census(dv)
     require(a == b, s"post-delete censuses diverge: cow=$a dv=$b")
 
-    val readMasked = minOf2(() => { census(dv); () })
-    val t2 = System.nanoTime()
-    CommitLogIngest.optimize(spark, dv, statsCol = Some("doc_id"))
-    val optimizeS = (System.nanoTime() - t2) / 1e9
+    val readMasked = Harness.minOf2(census(dv))._1
+    val optimizeS = Harness.timed(
+      CommitLogIngest.optimize(spark, dv, statsCol = Some("doc_id")))._1
     require(census(dv) == a, "OPTIMIZE changed the census")
-    val readOptimized = minOf2(() => { census(dv); () })
+    val readOptimized = Harness.minOf2(census(dv))._1
 
     // UPDATE economics (round-12 verdict task 3): the same hash-spread
     // ~0.1% selectivity, n_chars bumped in place — CoW rewrites every
@@ -118,18 +97,14 @@ object DvBench {
     val updPred = pmod(hash(col("doc_id")), lit(1000)) === 13
     val updSet: Map[String, org.apache.spark.sql.Column] =
       Map("n_chars" -> (col("n_chars") + lit(1000)))
-    val t3 = System.nanoTime()
-    val (_, cowUpdFiles) = CommitLogIngest.updateWhere(spark, cow, updPred,
-      updSet, statsCol = Some("doc_id"))
-    val cowUpdateS = (System.nanoTime() - t3) / 1e9
+    val (cowUpdateS, (_, cowUpdFiles)) = Harness.timed(CommitLogIngest
+      .updateWhere(spark, cow, updPred, updSet, statsCol = Some("doc_id")))
     val cowUpdV = CommitLogIngest.latestVersion(cow)
     val cowUpdBytes = spark.read.parquet(s"$cow/log/version=$cowUpdV")
       .filter(col("action") === "add").select("path").collect()
       .map(r => Files.size(Paths.get(r.getString(0)))).sum
-    val t4 = System.nanoTime()
-    val (dvUpdV, dvUpdFiles) = CommitLogIngest.updateWhere(spark, dv,
-      updPred, updSet, statsCol = Some("doc_id"))
-    val dvUpdateS = (System.nanoTime() - t4) / 1e9
+    val (dvUpdateS, (dvUpdV, dvUpdFiles)) = Harness.timed(CommitLogIngest
+      .updateWhere(spark, dv, updPred, updSet, statsCol = Some("doc_id")))
     val dvUpdBytes = dirBytes(CommitLogIngest.dvDir(dv, dvUpdV)) +
       spark.read.parquet(s"$dv/log/version=$dvUpdV")
         .filter(col("action") === "add").select("path").collect()

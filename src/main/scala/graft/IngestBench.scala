@@ -3,8 +3,6 @@ package graft
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.sql.SparkSession
-
 import graft.sources.{HttpReceiver, RequestSource}
 import graft.streaming.IngestPipeline
 
@@ -62,15 +60,7 @@ object IngestBench {
     val sinkMode = args.lift(3).getOrElse("count")
     val warmupReqs = math.min(5000, nReqs / 2)
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    graft.model.Tables.bootstrap(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("WARN")
 
     val dropDir = Files.createTempDirectory("ingestbench-drop").toString
     val dlqDir = Files.createTempDirectory("ingestbench-dlq").toString

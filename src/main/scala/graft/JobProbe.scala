@@ -19,13 +19,7 @@ import org.apache.spark.sql.SparkSession
 object JobProbe {
   def main(args: Array[String]): Unit = {
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions).getOrCreate()
-    graft.model.Tables.bootstrap(spark)
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session("ERROR")
 
     val starts = new ConcurrentHashMap[Int, (Long, Int, String)]()
     @volatile var t0 = 0L
@@ -43,21 +37,11 @@ object JobProbe {
     })
 
     def run(name: String): Unit = {
-      import graft.operators.{Dedup, Similarity, TextAnalysis}
-      val thunk: (String) => Unit = name match {
-        case "shared_dedup_pairs" => d => { Dedup.ngramJaccard(spark, d).count(); () }
-        case "shared_minhash_mins" => d => Dedup.materializeMinhash(spark, d)
-        case "shared_simhash_sig" => d => Dedup.materializeSimhash(spark, d)
-        case "shared_source_grams" => d => Dedup.materializeSourceGrams(spark, d)
-        case "shared_embed_pairs" => d => Similarity.materializeEmbedPairs(spark, d)
-        case "shared_kmeans_model" => d => Similarity.materializeKmeans(spark, d)
-        case "shared_pq_model" => d => Similarity.materializePq(spark, d)
-        case "shared_ivfpq_model" => d => Similarity.materializeIvfPq(spark, d)
-        case "shared_bpe_model" => d => TextAnalysis.materializeBpe(spark, d)
-        case q => d => { SparkEntry.queries(q)(spark, d).count(); () }
-      }
+      val build = SharedArtifacts.builds.toMap.getOrElse(name,
+        (s: SparkSession, d: String) => { SparkEntry.queries(name)(s, d).count(); () })
+      val thunk = (d: String) => build(spark, d)
       thunk("/root/testdata/sf0.001") // warm code paths, small SF
-      clearCaches()
+      SharedArtifacts.clearAll()
       println(s"== $name @ $sf")
       recording = true
       t0 = System.nanoTime()
@@ -66,14 +50,6 @@ object JobProbe {
       recording = false
       Thread.sleep(200) // let listener drain
       println(f"== total ${total}%.3f s")
-    }
-
-    def clearCaches(): Unit = {
-      graft.operators.Dedup.clearPairCache()
-      graft.operators.Similarity.clearEmbedPairCache()
-      graft.operators.Similarity.clearKmeansCache()
-      graft.operators.Similarity.clearPqCache()
-      graft.operators.TextAnalysis.clearBpeCache()
     }
 
     args.foreach(run)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.sinks.{ClickHouseSink, MetricStorage}
 import graft.sources.RequestSource
 import graft.streaming.{IngestPipeline, MetricFlusher}
@@ -27,47 +26,88 @@ import graft.streaming.{IngestPipeline, MetricFlusher}
   *                      blocking-socket edge, ~2× the accept rate)
   */
 object ProxyApp {
-  def main(args: Array[String]): Unit = {
-    val opts = args.sliding(2, 2).collect {
-      case Array(k, v) if k.startsWith("--") => k.drop(2) -> v
-    }.toMap
-    val drop = opts.getOrElse("drop", "./drop")
-    val fwd = opts.getOrElse("fwd", "http://localhost:8123")
-    val dlq = opts.getOrElse("dlq", "./errors")
-    val ckpt = opts.getOrElse("checkpoint", "./checkpoint")
-    val syncSec = opts.getOrElse("syncsec", "2").toInt
-    val resendInt = opts.getOrElse("resendint", "60").toInt
 
-    val spark = SparkSession.builder()
-      .appName("proxyhousespark")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    graft.model.Tables.bootstrap(spark)
+  /** The command line, parsed; defaults are the reference's. */
+  final case class Flags(
+      drop: String = "./drop",
+      fwd: String = "http://localhost:8123",
+      dlq: String = "./errors",
+      checkpoint: String = "./checkpoint",
+      syncSec: Int = 2,
+      resendInt: Int = 60,
+      graphite: Option[(String, Int)] = None,
+      listen: Option[Int] = None,
+      edge: String = "jdk")
+
+  /** `--flag value` pairs into [[Flags]]. An unknown or repeated flag, a
+    * flag with no value, a stray word or a value of the wrong shape is an
+    * IllegalArgumentException that names the flag — never a default. */
+  def parseFlags(args: Seq[String]): Flags = {
+    def bad(msg: String): Nothing = throw new IllegalArgumentException(msg)
+    def int(flag: String, v: String, min: Int, max: Int): Int =
+      v.toIntOption.filter(n => n >= min && n <= max).getOrElse(
+        bad(s"--$flag needs an integer in [$min, $max], got '$v'"))
+    def set(f: Flags, flag: String, v: String): Flags = flag match {
+      case "drop" => f.copy(drop = v)
+      case "fwd" => f.copy(fwd = v)
+      case "dlq" => f.copy(dlq = v)
+      case "checkpoint" => f.copy(checkpoint = v)
+      case "syncsec" => f.copy(syncSec = int(flag, v, 1, Int.MaxValue))
+      case "resendint" => f.copy(resendInt = int(flag, v, 1, Int.MaxValue))
+      case "listen" => f.copy(listen = Some(int(flag, v, 0, 65535)))
+      case "graphite" => v.lastIndexOf(':') match {
+        case i if i > 0 =>
+          f.copy(graphite = Some(v.take(i) -> int(flag, v.drop(i + 1), 1, 65535)))
+        case _ => bad(s"--graphite needs host:port, got '$v'")
+      }
+      case "edge" if v == "jdk" || v == "fast" => f.copy(edge = v)
+      case "edge" => bad(s"--edge needs jdk or fast, got '$v'")
+      case _ => bad(s"unknown flag --$flag")
+    }
+    @scala.annotation.tailrec
+    def go(rest: List[String], f: Flags, seen: Set[String]): Flags =
+      rest match {
+        case Nil =>
+          if (seen("edge") && f.listen.isEmpty) bad("--edge needs --listen")
+          f
+        case k :: _ if !k.startsWith("--") => bad(s"expected a --flag, got '$k'")
+        case k :: _ if seen(k.drop(2)) => bad(s"$k given twice")
+        case k :: v :: tail if !v.startsWith("--") =>
+          go(tail, set(f, k.drop(2), v), seen + k.drop(2))
+        case k :: _ => bad(s"$k needs a value")
+      }
+    go(args.toList, Flags(), Set.empty)
+  }
+
+  def main(args: Array[String]): Unit = {
+    val Flags(drop, fwd, dlq, checkpoint, syncSec, resendInt, graphite,
+      listen, edge) = try parseFlags(args.toSeq) catch {
+      case e: IllegalArgumentException =>
+        System.err.println(s"proxyhousespark: ${e.getMessage}")
+        sys.exit(2)
+    }
+
+    val spark = Harness.deployed()
 
     val hostname = java.net.InetAddress.getLocalHost.getHostName
     val metrics = new MetricStorage(hostname)
     val sink = new ClickHouseSink(fwd)
 
     // world-facing edge (O-1/O-2): HTTP → drop-dir files → fileStream
-    val receiver = opts.get("listen").map { p =>
+    val receiver = listen.map { p =>
       val st = () => IngestPipeline.dlqStatus(spark, dlq)
-      (opts.getOrElse("edge", "jdk") match {
-        case "fast" =>
-          new graft.sources.FastHttpReceiver(drop, p.toInt, status = st)
-        case _ => new graft.sources.HttpReceiver(drop, p.toInt, status = st)
+      (edge match {
+        case "fast" => new graft.sources.FastHttpReceiver(drop, p, status = st)
+        case _ => new graft.sources.HttpReceiver(drop, p, status = st)
       }).start()
     }
 
     val ingest = IngestPipeline.start(
       RequestSource.fileStream(spark, drop).select("uri", "body"),
-      dlq, ckpt, sink, syncSec, Some(metrics))
+      dlq, checkpoint, sink, syncSec, Some(metrics))
 
-    val flusher = opts.get("graphite").map { hp =>
-      val Array(h, p) = hp.split(":")
-      MetricFlusher.start(spark, metrics,
-        MetricFlusher.graphiteTransport(h, p.toInt))
+    val flusher = graphite.map { case (h, p) =>
+      MetricFlusher.start(spark, metrics, MetricFlusher.graphiteTransport(h, p))
     }
 
     // replay loop (main.go:302-321): a plain driver-side scheduler — the

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -49,16 +48,8 @@ object RollupBench {
     val nEvents = args.headOption.map(_.toInt).getOrElse(200000)
     val waves = args.lift(1).map(_.toInt).getOrElse(20)
     val perWave = nEvents / waves
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    graft.model.Tables.bootstrap(spark)
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session("ERROR",
+      "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false")
     implicit val sc = spark.sqlContext
     import spark.implicits._
 

@@ -36,34 +36,29 @@ object ScaleCheck {
   private val Sf1 = "target/sf1"
   private val Replicas = 10
 
-  /** Drop every build-once model/layout cache between measured passes —
-    * ONE list (VERDICT-r9 review: this block existed in four copies; a
-    * future cached artifact missing one copy silently turns that mode's
-    * pass-2 timing into a cache-hit artifact). */
-  private def clearModelCaches(): Unit = {
-    graft.operators.Dedup.clearPairCache()
-    graft.operators.Similarity.clearEmbedPairCache()
-    graft.operators.Similarity.clearKmeansCache()
-    graft.operators.Similarity.clearPqCache()
-    graft.operators.TextAnalysis.clearBpeCache()
-    graft.sources.ZOrderLayout.clearCache()
-    graft.sources.Compaction.clearCache()
-    graft.sources.IncrementalRollup.clearCache()
-    graft.sources.SchemaEvolution.clearCache()
-    graft.sources.FileIndex.clearCache()
+  /** Two timed passes of one family at one SF, every build-once cache
+    * dropped after each, so both passes time the real build and not a
+    * cache read. */
+  private def twoPasses(spark: SparkSession,
+      f: (SparkSession, String) => Unit, d: String): (Double, Double) = {
+    val a = Harness.timed(f(spark, d))._1; SharedArtifacts.clearAll()
+    val b = Harness.timed(f(spark, d))._1; SharedArtifacts.clearAll()
+    (a, b)
+  }
+
+  /** Bench discipline: min of two passes per (family, SF) — single-pass
+    * numbers on this box swing several-x under scheduler/GC noise (a
+    * first measurement run recorded kmeans 3.1 s, a second 94 s at the
+    * SAME sf0.1). */
+  private def minOf2(spark: SparkSession,
+      f: (SparkSession, String) => Unit, d: String): Double = {
+    val (a, b) = twoPasses(spark, f, d)
+    math.min(a, b)
   }
 
   def main(args: Array[String]): Unit = {
     val mode = args.headOption.getOrElse("all")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    graft.model.Tables.bootstrap(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("WARN")
     if (mode == "all" || mode == "generate") generate(spark)
     if (mode == "all" || mode == "measure") measure(spark)
     if (mode == "volumes") volumes(spark)
@@ -286,17 +281,9 @@ object ScaleCheck {
     fams.foreach { case (_, f) =>
       try f(spark, "/root/testdata/sf0.001") catch { case _: Throwable => () }
     }
-    def timed(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-    def minOf2(f: (SparkSession, String) => Unit, d: String): Double = {
-      val a = timed(f(spark, d)); clearModelCaches()
-      val b = timed(f(spark, d)); clearModelCaches()
-      math.min(a, b)
-    }
     val rows = fams.map { case (name, f) =>
-      val t10 = minOf2(f, Sf10)
-      val t100 = minOf2(f, Sf100)
+      val t10 = minOf2(spark, f, Sf10)
+      val t100 = minOf2(spark, f, Sf100)
       val ratio = t100 / t10
       println(f"""{"family":"$name","sf10_sec":$t10%.2f,""" +
         f""""sf100_sec":$t100%.2f,"ratio":$ratio%.2f}""")
@@ -315,7 +302,7 @@ object ScaleCheck {
     Seq("sf0.1" -> Sf01, "sf1" -> Sf1).foreach { case (label, d) =>
       val docs = spark.read.parquet(s"$d/documents.parquet").count()
       val pairs = graft.operators.Dedup.ngramJaccard(spark, d).count()
-      graft.operators.Dedup.clearPairCache()
+      SharedArtifacts.clearAll()
       val terms = graft.operators.TextAnalysis.tfIdf(spark, d)
         .agg(count(lit(1))).head().getLong(0)
       val vecs = spark.read.parquet(s"$d/embeddings.parquet").count()
@@ -462,27 +449,9 @@ object ScaleCheck {
     families.foreach { case (_, f) =>
       try f(spark, "/root/testdata/sf0.001") catch { case _: Throwable => () }
     }
-    def timed(f: => Unit): Double = {
-      val t0 = System.nanoTime()
-      f
-      (System.nanoTime() - t0) / 1e9
-    }
-    // Bench discipline: min of two passes per (family, SF) — single-pass
-    // numbers on this box swing several-x under scheduler/GC noise (a
-    // first measurement run recorded kmeans 3.1 s, a second 94 s at the
-    // SAME sf0.1). The build-once caches (pair list, k-means model) are
-    // DROPPED between passes so both passes time the real build, not a
-    // cache read.
-    def minOf2(f: (SparkSession, String) => Unit, d: String): Double = {
-      val a = timed(f(spark, d))
-      clearModelCaches()
-      val b = timed(f(spark, d))
-      clearModelCaches()
-      math.min(a, b)
-    }
     val rows = families.map { case (name, f) =>
-      val t01 = minOf2(f, Sf01)
-      val t1 = minOf2(f, Sf1)
+      val t01 = minOf2(spark, f, Sf01)
+      val t1 = minOf2(spark, f, Sf1)
       val exp = math.log10(t1 / t01)
       println(f"""{"family":"$name","sf0.1_sec":$t01%.2f,"sf1_sec":$t1%.2f,"exponent":$exp%.2f}""")
       (name, t01, t1, exp)
@@ -498,11 +467,7 @@ object ScaleCheck {
   def measureFamily(spark: SparkSession, name: String, dir: String): Unit = {
     val f = families.toMap.apply(name)
     try f(spark, "/root/testdata/sf0.001") catch { case _: Throwable => () }
-    def timed(g: => Unit): Double = {
-      val t0 = System.nanoTime(); g; (System.nanoTime() - t0) / 1e9
-    }
-    val a = timed(f(spark, dir)); clearModelCaches()
-    val b = timed(f(spark, dir)); clearModelCaches()
+    val (a, b) = twoPasses(spark, f, dir)
     println(f"""{"family":"$name","dir":"$dir","pass1_sec":$a%.2f,"pass2_sec":$b%.2f,"min_sec":${math.min(a, b)}%.2f}""")
   }
 
@@ -510,10 +475,8 @@ object ScaleCheck {
       : Unit = {
     val f = families.toMap.apply(name)
     try f(spark, "/root/testdata/sf0.001") catch { case _: Throwable => () }
-    val t0 = System.nanoTime()
-    f(spark, dir)
-    val a = (System.nanoTime() - t0) / 1e9
-    clearModelCaches()
+    val a = Harness.timed(f(spark, dir))._1
+    SharedArtifacts.clearAll()
     println(f"""{"family":"$name","dir":"$dir","pass1_sec":$a%.2f,"passes":1}""")
   }
 
@@ -530,22 +493,12 @@ object ScaleCheck {
     families.foreach { case (_, f) =>
       try f(spark, "/root/testdata/sf0.001") catch { case _: Throwable => () }
     }
-    def timed(f: => Unit): Double = {
-      val t0 = System.nanoTime()
-      f
-      (System.nanoTime() - t0) / 1e9
-    }
-    def minOf2(f: (SparkSession, String) => Unit, d: String): Double = {
-      val a = timed(f(spark, d)); clearModelCaches()
-      val b = timed(f(spark, d)); clearModelCaches()
-      math.min(a, b)
-    }
     val points = Seq(0.1 -> Sf01, 1.0 -> Sf1, 10.0 -> Sf10)
     val logSf = points.map(p => math.log10(p._1))
     val meanX = logSf.sum / logSf.size
     val varX = logSf.map(x => (x - meanX) * (x - meanX)).sum
     val rows = families.map { case (name, f) =>
-      val ts = points.map { case (_, d) => minOf2(f, d) }
+      val ts = points.map { case (_, d) => minOf2(spark, f, d) }
       val logT = ts.map(math.log10)
       val meanY = logT.sum / logT.size
       val slope = logSf.zip(logT)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.streaming.CommitLogIngest
@@ -25,28 +25,10 @@ import graft.streaming.CommitLogIngest
   */
 object ScanBench {
 
-  private def minOf2[T](f: () => T): (Double, T) = {
-    def pass(): (Double, T) = {
-      val t0 = System.nanoTime()
-      val r = f()
-      ((System.nanoTime() - t0) / 1e9, r)
-    }
-    val a = pass(); val b = pass()
-    if (a._1 <= b._1) a else b
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    graft.model.Tables.bootstrap(spark)
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session("ERROR")
 
     val root = java.nio.file.Files.createTempDirectory("graft-scanbench")
     val table = s"$root/table"
@@ -86,10 +68,10 @@ object ScanBench {
     wide(viaConnector()); wide(viaNative())
     narrow(viaConnector()); narrow(viaNative())
 
-    val (wideConnS, wideConnR) = minOf2(() => wide(viaConnector()))
-    val (wideNatS, wideNatR) = minOf2(() => wide(viaNative()))
-    val (narrowConnS, narrowConnR) = minOf2(() => narrow(viaConnector()))
-    val (narrowNatS, narrowNatR) = minOf2(() => narrow(viaNative()))
+    val (wideConnS, wideConnR) = Harness.minOf2(wide(viaConnector()))
+    val (wideNatS, wideNatR) = Harness.minOf2(wide(viaNative()))
+    val (narrowConnS, narrowConnR) = Harness.minOf2(narrow(viaConnector()))
+    val (narrowNatS, narrowNatR) = Harness.minOf2(narrow(viaNative()))
 
     // ARRAY leg (round-12 verdict task 8): an embeddings-style
     // array<float> column through the vectorized array decode vs the
@@ -107,16 +89,16 @@ object ScanBench {
       df.agg(sum(size(col("embedding"))),
         count(when(element_at(col("embedding"), 1) > 0f, 1))).head().toSeq
     arrAgg(viaConnE()); arrAgg(viaNatE())
-    val (arrConnS, arrConnR) = minOf2(() => arrAgg(viaConnE()))
-    val (arrNatS, arrNatR) = minOf2(() => arrAgg(viaNatE()))
+    val (arrConnS, arrConnR) = Harness.minOf2(arrAgg(viaConnE()))
+    val (arrNatS, arrNatR) = Harness.minOf2(arrAgg(viaNatE()))
 
     // COUNT leg (round-12 verdict task 7): the footer-only aggregate
     // pushdown vs the native scan's count — the connector answers from
     // metadata, so this leg should be near-constant regardless of SF
     def cnt(df: DataFrame): Long = df.agg(count(lit(1))).head().getLong(0)
     cnt(viaConnector()); cnt(viaNative())
-    val (cntConnS, cntConnR) = minOf2(() => cnt(viaConnector()))
-    val (cntNatS, cntNatR) = minOf2(() => cnt(viaNative()))
+    val (cntConnS, cntConnR) = Harness.minOf2(cnt(viaConnector()))
+    val (cntNatS, cntNatR) = Harness.minOf2(cnt(viaNative()))
 
     // BLOOM leg (E-177): point probe on the interleaved-by-construction
     // layout — every file's [min,max] covers every key, so the per-file
@@ -135,8 +117,8 @@ object ScanBench {
     graft.sources.CommitLogReadTracker.disable()
     val liveFiles = graft.sources.LayoutDirs
       .dataFiles(s"$table/data").size
-    val (bloomS, bloomR) = minOf2(() => bloomProbe())
-    val (bloomNatS, bloomNatR) = minOf2(() => nativeProbe())
+    val (bloomS, bloomR) = Harness.minOf2(bloomProbe())
+    val (bloomNatS, bloomNatR) = Harness.minOf2(nativeProbe())
 
     // RUNTIME-PRUNE leg (E-179): the two-day star join over the
     // day-partitioned events table, with dynamic partition pruning ON
@@ -170,8 +152,8 @@ object ScanBench {
     val noDppFiles = graft.sources.CommitLogReadTracker.drain()
       .distinct.count(_.startsWith(evTable))
     graft.sources.CommitLogReadTracker.disable()
-    val (dppOnS, dppOnR) = minOf2(() => withDpp(true)(dppJoin _))
-    val (dppOffS, dppOffR) = minOf2(() => withDpp(false)(dppJoin _))
+    val (dppOnS, dppOnR) = Harness.minOf2(withDpp(true)(dppJoin _))
+    val (dppOffS, dppOffR) = Harness.minOf2(withDpp(false)(dppJoin _))
 
     // doubles sum in partition order, which differs between the two scans
     // (per-file partitions vs size-split) — exact for integrals/strings,

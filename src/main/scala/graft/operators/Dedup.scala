@@ -1626,9 +1626,11 @@ object Dedup {
     // (source_a < source_b) pairs the old sorted-set expansion walked, and
     // n_shared = Σ over masks containing both bits of that mask's hash
     // count. Sources beyond 63 (never observed; corpus property, not an
-    // SF property) fall back to the round-15 set-collect shape.
+    // SF property) fall back to the round-15 set-collect shape, and so
+    // does an empty corpus: the bit chains need at least one source, and
+    // the set-collect shape yields no rows over no grams.
     val (sh, srcs) = sourceGramsWithSrcs(spark, sfDir)
-    if (srcs.length > 63) {
+    if (srcs.isEmpty || srcs.length > 63) {
       val multi = sh.groupBy(col("h")).agg(count(lit(1)).as("n"))
         .filter(col("n") > 1).select("h")
       sh.join(multi, Seq("h"))
@@ -1783,22 +1785,14 @@ object Dedup {
   /** Generic large-star/small-star component labels over an undirected
     * pair list (columns u, v). Returns (u, lbl = component min).
     *
-    * `graft.star.checkpointEvery` (default 1) sets the lineage-truncation
-    * cadence: N means only every Nth round localCheckpoints; skipped
-    * rounds leave their two-stage plan on top of the last checkpoint, so
-    * the next checksum/checkpoint job re-executes them (the edge set is
-    * tiny after blocking, so that trade is scheduler overhead vs compute).
-    * Measured at sf0.1 (StarCadence, 5 runs each): cadence 2 is ~5×
-    * SLOWER (median 10.0 s vs 2.1 s; min 8.8 vs 1.9) — skipped rounds
-    * re-execute inside both the convergence checksum and the next
-    * checkpoint job, and that recomputation dwarfs the per-round
-    * checkpoint cost. Default stays 1 (checkpoint every round); the
-    * bench swing on this entry is scheduler noise, not checkpoint
-    * cadence (BENCH_NOTES round 9). */
+    * Every round localCheckpoints. Checkpointing only every other round
+    * was measured at sf0.1 (5 runs each) as ~5× SLOWER (median 10.0 s vs
+    * 2.1 s; min 8.8 vs 1.9): a skipped round's two-stage plan re-executes
+    * inside both the convergence checksum and the next checkpoint job,
+    * and that recomputation dwarfs the per-round checkpoint cost. The
+    * bench swing on this entry is scheduler noise, not checkpoint cadence
+    * (BENCH_NOTES round 9). */
   def starComponents(pairs: DataFrame): DataFrame = {
-    val every = pairs.sparkSession.conf
-      .getOption("graft.star.checkpointEvery").map(_.toInt).getOrElse(1)
-    require(every >= 1, s"graft.star.checkpointEvery must be >= 1, got $every")
     // Materialize the symmetrized edge set ONCE at its upstream
     // partitioning (counting the raw `pairs` plan here could re-execute an
     // expensive pair-scoring subtree), then size the loop's coalesce from
@@ -1822,10 +1816,8 @@ object Dedup {
     var rounds = 0
     var converged = false
     while (!converged && rounds < 50) {
-      val raw = symmetrize(smallStar(symmetrize(largeStar(edges))))
-        .coalesce(ccParts)
-      val next =
-        if (rounds % every == every - 1) raw.truncateLineage(false) else raw
+      val next = symmetrize(smallStar(symmetrize(largeStar(edges))))
+        .coalesce(ccParts).truncateLineage(false)
       // convergence: edge-set checksum (count + order-independent
       // bit_xor of per-edge hashes — xor can't overflow under ANSI) —
       // stable set ⇒ star graphs reached; the checksum action is also

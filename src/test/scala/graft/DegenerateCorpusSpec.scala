@@ -135,4 +135,16 @@ class DegenerateCorpusSpec extends SparkSuite {
       assert(rec.length == 1 && rec(0).getLong(2) == 3L)
     } finally graft.operators.Similarity.clearPqCache()
   }
+
+  test("cross-source contamination over an empty corpus is empty, not a throw") {
+    val s = spark
+    import s.implicits._
+    val dir = Files.createTempDirectory("graft-nodocs").toString
+    Seq.empty[(Long, String, String, String, Long)]
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val df = graft.operators.Dedup.crossContamination(spark, dir)
+    assert(df.columns.toSeq == Seq("source_a", "source_b", "n_shared"))
+    assert(df.collect().isEmpty)
+  }
 }

@@ -14,12 +14,12 @@ def main():
     sf_dir, out_dir = args[0], args[1]
     names_filter = set(args[2:])
     if "--skip-verify" not in sys.argv:
-        env = dict(os.environ, SPARK_GRAFT_CPUS="8")
         names = " ".join(sorted(names_filter))
         r = subprocess.run(
             ["sbt", "-batch",
              f'runMain graft.Verify {sf_dir} {out_dir} {names}'.strip()],
-            cwd="/root/repo", env=env, capture_output=True, text=True)
+            cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+            capture_output=True, text=True)
         tail = "\n".join((r.stdout + r.stderr).splitlines()[-30:])
         if r.returncode != 0:
             print(tail); sys.exit(1)
